@@ -1,0 +1,8 @@
+package org.apache.spark
+
+/** Access to the one scheduler hook the benchmark needs that Spark
+  * keeps package-private. */
+object PerfbenchBridge {
+  /** Block until every queued listener event has been delivered. */
+  def drainListeners(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
